@@ -1,21 +1,20 @@
-"""Bench-floor regression gate (r4 verdict item 4): the historically
-hottest catalog entries must stay under a generously pinned wall-clock
-ceiling at sf0.1, so a d18-style collapse (72 s from a dropped persist)
-is caught in-repo instead of one judge round later.
+"""Bench-floor regression gate: the hottest catalog entries
+(`bench.CEILINGS`) must stay under a wall-clock ceiling at sf0.1, so a
+d18-style collapse (72 s from a dropped persist) is caught in-repo.
 
-Ceilings are ~3x the min-of-2 measured on 2026-08-14 (local[8],
-shuffle=8, this box) — loose enough for machine drift, far below the
-10x+ blowups this gate exists to catch. Measurement discipline per
-the box's documented 3-7x hypervisor stalls: up to MAX_RUNS attempts,
-pass as soon as ONE run beats the ceiling (a real regression fails
-every attempt; a stall window would need three consecutive stalls to
-false-positive).
+Ceilings are 3x the raw min-of-3 under this fixture's config
+(local[8], shuffle=8) on a 4-CPU box — loose enough for machine drift,
+far below the 10x+ blowups this gate exists to catch. Seconds are raw:
+up to MAX_RUNS attempts, passing as soon as ONE run beats the ceiling
+(a real regression fails every attempt; a stall would have to hit
+three runs in a row to false-positive).
 
-Validated once at introduction (2026-08-14): no-op'ing
-`tracked_persist` + the edge-list `.persist()` inside d18's CC
-pipeline re-measured 13.0 s vs the 10 s ceiling (healthy min 3.7 s) —
-the gate fails the reverted fix and passes the real one with >2.5x
-margin on both sides.
+Validation (4-CPU box, 2026-10-17): no-op'ing `tracked_persist` + the
+edge-list `.persist()` inside d18's CC pipeline (`datapipe/dedup.py`)
+makes `test_bench_floor[d18_dedup_clusters]` fail with raw runs
+27.3 / 18.3 / 17.3 s against its 13.5 s ceiling; the healthy code
+passes with warm runs of 4.4-5.5 s. The broken code clears the ceiling
+by only ~1.2x, so a collapse smaller than d18's may pass unnoticed.
 """
 
 from __future__ import annotations
@@ -24,165 +23,28 @@ import time
 
 import pytest
 
+from bench import CEILINGS
+
 SF_DIR = "/root/testdata/sf0.1"
-
-# entry -> ceiling seconds (~3x the min-of-3 calibration; CC family +
-# p4/p5/p6/p7 recalibrated 2026-08-15 after the r9 CC-MR rewrite, the
-# rest from the 2026-08-14 min-of-2 calibration)
-CEILINGS = {
-    "d18_dedup_clusters": 6.5,         # min 2.16 (r9 CC-MR; was 3.7)
-    "d2_ngram_jaccard_pairs": 4.5,     # min 1.35
-    "d19_semantic_dedup_clusters": 6.0,   # min 1.99 (r9 CC-MR; was 4.1)
-    "r2_error_checks": 15.0,           # min 4.9
-    "d31_cluster_representatives": 6.5,   # min 2.10 (r9 CC-MR; was 3.2)
-    "w10e_full_record": 9.0,           # min 2.7
-    "w10j_dated_schedule_record": 9.0,  # min 2.6 (r16; same machinery)
-    "w10f_yield_to_worst": 3.0,        # min 0.60 at local[32]; 2 solver legs
-    "w11b_modified_following": 4.0,    # min 1.01 at local[32]; spine windows
-    "w10g_yield_to_worst_schedule": 6.0,  # min 1.61 at local[32]; legs solve
-    "w10h_odd_first_coupon": 8.0,      # min ~1.6 at local[32] (r10); stub solve
-    # streaming replay: fixed micro-batch machinery dominates (state
-    # partitions pinned to 2 + single-file staging appends as of r11:
-    # warm min ~4.8 s at local[32], was ~8.5 at 8 partitions); ~2.5x
-    # margin on the warm min
-    "a1s_streaming_daily_panel": 12.0,
-    # same fixed micro-batch machinery (3-drop wire replay + stateful
-    # dedup; warm min ~5.7 s at local[32], r16 calibration)
-    "s5_wire_ingest_dedup": 12.0,
-    "p0_stage0_panel": 13.0,           # min 4.3
-    "p1_stage0_full": 17.0,            # min 5.6
-    "p2_stage1_full": 6.0,             # min 1.9
-    "p3_standard_full": 6.0,           # min 1.8
-    "p6_portfolio_panel": 11.0,        # min 3.66 (r9 recalibration)
-    # r8 verdict item 2: the stage-2 tranche entries were invisible to
-    # the gate (p7 was the 3rd-slowest recorded entry)
-    "p4_monthly_signals": 4.5,         # min 1.38
-    "p5_carry_value": 7.0,             # min 2.30
-    "p7_factor_panel": 10.0,           # min 3.20
-    "p8_tail_risk_panel": 9.0,         # min 2.11 at local[32]
-    # r5 verdict item 1: the report entries over the stage-1 chain.
-    # The flagged 2.33->4.08s "regression" did not survive an
-    # interleaved A/B re-measure (r4-end worktree vs HEAD in ONE
-    # session, 2026-08-14: r3 1.45 vs 1.51, p2 1.10 vs 1.27 min-of-3;
-    # stage1.py itself untouched since round 2) — box noise, not code.
-    # Pinned here so a future real slowdown fails in-repo.
-    "r3_availability_by_rating": 6.0,  # min 1.5-1.9
-    "r2_descriptive_by_rating": 6.0,   # min 1.7
-    # r12 verdict item 3: the grouped-map kernels, gated on the
-    # ARROW-normalized number (min-of-3 calibrated 2026-08-16 at
-    # local[8]/shuffle=8 alongside GATE_ARROW_CANARY_SEC below)
-    "w1_decimal_shift": 8.5,           # min 2.78
-    "w2_bounce_back": 6.0,             # min 2.06
-    "w7_ultra_distressed": 5.0,        # min 1.70
-    # r13 verdict item 5: the mapInPandas codec entries were the other
-    # half of the Arrow drift band but had no floors at all
-    # (arrow-normalized min-of-3 calibrated 2026-08-16, live canary
-    # ~0.67-0.71 against the 0.518 calibration → scale ~1.3)
-    "d12b_png_features": 2.5,          # normalized min 0.64
-    "d12c_jpeg_features": 2.5,         # normalized min 0.72
-    "d12d_wav_features": 2.0,          # normalized min 0.50
-    "d12e_video_frame_features": 4.5,  # normalized min 1.37
-    # r14: the rebuilt correction chain (exact reference key sets) and
-    # the new report entries (min-of-4 calibrated 2026-08-16, canary
-    # scale ~1.0-1.2 at gate config)
-    "j4_correction_chain": 10.0,       # min 3.23
-    # r15: ACT-exact record and the top-5+Other evolution entry
-    "w10i_act_exact_record": 8.0,      # bench-config min 1.89
-    "r18_bond_characteristics_evolution": 5.0,  # bench-config min 1.38
-    # r15: pinned after the zip_with-slice rewrite cut it 11.9 -> 1.4 s
-    # (a regression of the interpreted-HOF build trips this hard)
-    "d34_repetition_signals": 4.5,     # bench-config min 1.40
-    "r5_distressed_series": 10.0,      # min 3.39 (W7 grouped-map core)
-    "r6_default_dynamics": 3.5,        # min 1.09
-    "r8_active_dormant": 2.0,          # min 0.61
-}
-
-# Entries whose hot path is a grouped-map applyInPandas or Arrow
-# pandas_udf kernel normalize by the ARROW canary (r12 verdict item 3):
-# this box stalls the Python-worker/Arrow axis independently of the
-# JVM-shuffle axis (r12: +10% Arrow drift with a flat shuffle canary),
-# so a shuffle-normalized gate would mis-scale exactly these entries.
-# Mirrors bench.py's ARROW_AXIS ∩ CEILINGS.
-ARROW_AXIS = frozenset({
-    "w1_decimal_shift",
-    "w2_bounce_back",
-    "w7_ultra_distressed",
-    "w10e_full_record",
-    "w10f_yield_to_worst",
-    "w10g_yield_to_worst_schedule",
-    "w10h_odd_first_coupon",
-    "w10i_act_exact_record",
-    "d12b_png_features",
-    "d12c_jpeg_features",
-    "d12d_wav_features",
-    "d12e_video_frame_features",
-    "r2_error_checks",
-    "r5_distressed_series",  # W7 grouped-map dominates its plan
-})
-
 MAX_RUNS = 3
-
-# The shared canaries (trace_data_pipeline_spark/canary.py) measured
-# min-of-5 under THIS gate's config (local[8], shuffle=8) on the same
-# box state that reproduced the CEILINGS' warm mins (shuffle
-# 2026-08-15; arrow 2026-08-16 alongside the w1/w2/w7 calibration).
-# The gate compares canary-NORMALIZED numbers (r11 verdict item 2) on
-# each entry's own axis (r12 item 3): each measured run divides by
-# max(1, bracket-live/calib) before meeting its ceiling, so a slow
-# hypervisor window can no longer fail entries whose code is unchanged
-# — while a real 10x regression still fails every normalized attempt.
-# Each run is BRACKETED by two canary samples and the divisor takes
-# their MIN (r12 ADVICE item 1): a single post-run sample that itself
-# caught a 3-7x stall would inflate the scale and normalize away a
-# genuine 2-3x regression coinciding with it; min-of-bracket rejects
-# one stalled sample, mirroring bench.py's _segment_sec. The scale
-# clamps at 1.0: a faster-than-calibration box keeps the gate strictly
-# no looser than the raw comparison.
-GATE_CANARY_SEC = 0.345
-# r15: the arrow canary job changed to a grouped-map applyInPandas
-# kernel (canary.py) — re-calibrated min-of-6 under this gate's config
-# (local[8], shuffle=8) on 2026-08-16 in the same session as the
-# bench-config re-pin (bench.py FLOORS_ARROW_CANARY_SEC).
-GATE_ARROW_CANARY_SEC = 0.934
 
 
 @pytest.mark.slow
 @pytest.mark.parametrize("name", sorted(CEILINGS))
 def test_bench_floor(spark, name):
-    from trace_data_pipeline_spark.canary import (
-        arrow_canary_sec,
-        shuffle_canary_sec,
-    )
     from trace_data_pipeline_spark.operators.caching import release_caches
     from trace_data_pipeline_spark.plans import get_catalog
 
     builder = get_catalog()[name].builder
-    if name in ARROW_AXIS:
-        canary_fn, calib = arrow_canary_sec, GATE_ARROW_CANARY_SEC
-    else:
-        canary_fn, calib = shuffle_canary_sec, GATE_CANARY_SEC
-    # one warm-up of common physical shapes per session is done by the
-    # first entry's first run; the retry ladder absorbs it
-    best = None
-    scales = []
-    pre = canary_fn(spark)
+    runs = []
     for _ in range(MAX_RUNS):
         t0 = time.perf_counter()
         builder(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
+        runs.append(time.perf_counter() - t0)
         release_caches()
-        post = canary_fn(spark)
-        scale = max(1.0, min(pre, post) / calib)
-        pre = post
-        scales.append(scale)
-        best = min(best, dt / scale) if best is not None else dt / scale
-        if best <= CEILINGS[name]:
+        if runs[-1] <= CEILINGS[name]:
             break
-    assert best <= CEILINGS[name], (
-        f"{name}: best of {MAX_RUNS} normalized runs {best:.2f}s "
-        f"(canary scales {[f'{s:.2f}' for s in scales]}, axis "
-        f"{'arrow' if name in ARROW_AXIS else 'shuffle'}) exceeds the "
-        f"{CEILINGS[name]:.0f}s floor ceiling — a real perf regression "
-        "(hypervisor stalls cannot survive min-of-3 + min-of-bracket "
-        "normalization)"
+    assert min(runs) <= CEILINGS[name], (
+        f"{name}: raw runs {[f'{r:.2f}' for r in runs]}s all exceed the "
+        f"{CEILINGS[name]:.1f}s ceiling — a real perf regression"
     )

@@ -115,25 +115,6 @@ def time_window_filter(
     return df.filter(in_window)
 
 
-def calendar_filter(
-    df: DataFrame,
-    date_col: str,
-    calendar: DataFrame,
-    cal_date_col: str = "session_date",
-    keep_missing: bool = False,
-) -> DataFrame:
-    """F9: keep rows whose date is a valid trading session — a broadcast
-    left-semi join against the (tiny) calendar table, replacing the
-    reference's isin against pandas_market_calendars
-    (`create_daily_enhanced_trace.py:1397-1456`)."""
-    cal = F.broadcast(calendar.select(F.col(cal_date_col).alias(date_col)).distinct())
-    kept = df.join(cal, [date_col], "left_semi")
-    if keep_missing:
-        missing = df.filter(F.col(date_col).isNull())
-        kept = kept.unionByName(missing)
-    return kept
-
-
 def volume_filter(
     df: DataFrame,
     price_col: str,

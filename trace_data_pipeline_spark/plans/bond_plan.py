@@ -211,7 +211,6 @@ def _dcf_sql(d1: str, d2: str) -> str:
     END"""
 
 
-_CFQ = "(CASE WHEN t = n THEN c * 100 + 100 ELSE c * 100 END)"
 _BD1 = (
     "CASE WHEN isodow(trade_d + 1) = 6 THEN trade_d + 3 "
     "WHEN isodow(trade_d + 1) = 7 THEN trade_d + 2 ELSE trade_d + 1 END"
