@@ -17,7 +17,6 @@ from trace_data_pipeline_spark.datapipe.multimodal import (
     decode_image,
     extract_features,
     resize_images,
-    sample_frames,
 )
 
 
@@ -69,20 +68,6 @@ def test_resize_geometry_is_jvm_side(spark):
     assert out[1].payload == hashlib.md5(b"wide").digest() + (256).to_bytes(
         4, "big"
     ) + (128).to_bytes(4, "big")
-
-
-def test_sample_frames_from_metadata(spark):
-    m = _media(
-        spark,
-        [
-            (1, b"v", ("video/mp4", None, None, 3500)),
-            (2, b"v", ("video/mp4", None, None, 0)),
-        ],
-    )
-    out = sample_frames(m, every_ms=1000)
-    rows = out.filter(F.col("media_id") == 1).orderBy("frame_idx").collect()
-    assert [r.frame_ts_ms for r in rows] == [0, 1000, 2000, 3000]
-    assert out.filter(F.col("media_id") == 2).count() == 1  # frame 0 only
 
 
 # ---- real PNG codec ----------------------------------------------------

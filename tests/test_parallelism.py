@@ -100,3 +100,15 @@ def test_estimate_scan_width_formula():
     assert estimate_scan_width([1 * MB] * 40, 128 * MB, 4 * MB, 32) == 32
     # huge file caps at maxPartitionBytes: 10 GB / 128 MB = 81 splits
     assert estimate_scan_width([10 * 1024 * MB], 128 * MB, 4 * MB, 8) == 81
+
+
+def test_streaming_plan_degrades_to_widening(spark):
+    """A streaming plan has neither a file listing nor an RDD: both
+    probes raise AnalysisException, which must read as width 0, not
+    fail the caller. j4's broadcast-size probe degrades the same way."""
+    from trace_data_pipeline_spark.operators.cleaning import _estimated_bytes
+
+    df = spark.readStream.format("rate").load()
+    out = ensure_min_parallelism(df, num_partitions=4)
+    assert out is not df and out.isStreaming
+    assert _estimated_bytes(df) is None

@@ -149,20 +149,6 @@ def extract_features(
     return media.select("media_id", "payload").mapInPandas(run, FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plan from METADATA alone (no demux, no decode) —
-    the cheap JVM-side spine for containers without a codec. MJPEG AVI
-    payloads have the real alternative: `extract_video_features`
-    demuxes and decodes the sampled frames themselves."""
-    n_frames = F.greatest(
-        (F.col("meta.duration_ms") / F.lit(every_ms)).cast("int"), F.lit(0)
-    )
-    return media.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), n_frames)).alias("frame_idx"),
-    ).withColumn("frame_ts_ms", F.col("frame_idx") * F.lit(every_ms))
-
-
 RESIZED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
+from pyspark.errors import AnalysisException, PySparkAttributeError
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -35,13 +36,13 @@ def _estimated_bytes(df: DataFrame) -> int | None:
     when unavailable. Only meaningful for scan-rooted frames (file
     statistics); derived joins/aggregates inflate multiplicatively and
     must not be fed here. Classic-mode JVM introspection — under Spark
-    Connect (no _jdf) callers degrade to AQE's runtime join selection
-    rather than failing."""
+    Connect (no _jdf) and on streaming plans (no batch statistics)
+    callers degrade to AQE's runtime join selection rather than failing."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:
+    except (AnalysisException, PySparkAttributeError):
         return None
 
 

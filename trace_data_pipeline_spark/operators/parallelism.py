@@ -17,6 +17,11 @@ not to AQE's byte heuristic.
 
 from __future__ import annotations
 
+from pyspark.errors import (
+    AnalysisException,
+    PySparkAttributeError,
+    PySparkNotImplementedError,
+)
 from pyspark.sql import DataFrame
 
 
@@ -86,7 +91,7 @@ def ensure_min_parallelism(df: DataFrame, num_partitions: int | None = None) -> 
         )
     try:
         files = df.inputFiles()
-    except Exception:
+    except AnalysisException:  # streaming plans have no file listing
         files = []
     if files:
         conf = df.sparkSession.conf
@@ -115,9 +120,10 @@ def ensure_min_parallelism(df: DataFrame, num_partitions: int | None = None) -> 
         )
     else:
         # non-file-backed plan: the only honest probe is the RDD one
+        # (streaming plans cannot become an RDD; Spark Connect has none)
         try:
             width = df.rdd.getNumPartitions()
-        except Exception:
+        except (AnalysisException, PySparkNotImplementedError, PySparkAttributeError):
             width = 0
     if width >= num_partitions:
         return df

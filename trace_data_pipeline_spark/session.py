@@ -14,6 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the package, so every Python worker can import it
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -52,8 +55,14 @@ def get_spark(
         # error-attribution sugar, no execution semantics; off for the
         # engine's sessions exactly as a production job would run it.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # workers import pyspark from its installed package, not from the
+        # archives Spark puts on their path (see worker_daemon.py)
+        .config("spark.python.daemon.module", "trace_data_pipeline_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (_ENGINE_ROOT, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
