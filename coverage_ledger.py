@@ -17,6 +17,7 @@ Usage: python coverage_ledger.py          # rewrite COVERAGE.md in place
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import os
 import re
@@ -76,8 +77,8 @@ def build_ledger(repo: str = REPO, drop_max_round: bool = False) -> dict:
         for sc in scales.values():
             for name, rec in sc.get("entries", {}).items():
                 prev = parity_proved.get(name)
-                # staleness = the OLDEST scale's stamp: an entry is only
-                # as fresh as its least-recently-proved scale
+                # show the OLDEST scale's stamp: an entry is only as
+                # fresh as its least-recently-proved scale
                 if prev is None or rec["proved"] < prev:
                     parity_proved[name] = rec["proved"]
 
@@ -170,8 +171,9 @@ def _import_graph(repo: str) -> tuple[dict[str, set[str]], dict[str, str]]:
 def entry_dependency_files(repo: str = REPO) -> dict[str, list[str]]:
     """For every catalog entry: the repo-relative package files its
     builder can reach (defining module + transitive repo-internal
-    imports). This is the file set whose newest commit a parity stamp
-    must postdate."""
+    imports). A parity stamp's `tree_digest` (`entry_digests`) covers
+    exactly this file set, so an edit to any of these files makes the
+    entry's stamps stale until the sweep re-proves it."""
     import inspect
 
     from trace_data_pipeline_spark.plans import get_catalog
@@ -201,52 +203,65 @@ def entry_dependency_files(repo: str = REPO) -> dict[str, list[str]]:
     return out
 
 
-def stale_parity_stamps(repo: str = REPO) -> dict[str, dict]:
-    """Entries whose OLDEST per-scale parity stamp predates the newest
-    commit touching any file in their dependency closure (r14 verdict
-    item 7: a stamp taken pre-commit proves the pre-commit tree — the
-    j18/p3/s2 race). Re-prove with:
+def entry_digests(
+    deps: dict[str, list[str]], repo: str = REPO
+) -> tuple[dict[str, str], dict[str, str]]:
+    """(entry -> tree digest, file -> sha256 of its bytes) for the
+    `entry_dependency_files` map `deps`, read from the working tree.
+
+    An entry's tree digest is a sha256 over its sorted (repo-relative
+    path, sha256 of the file's bytes) pairs: it changes when any byte
+    of a dependency file changes, and when a file joins or leaves the
+    entry's closure. It depends on file contents only, so a git
+    checkout, an uncommitted working tree and a `git archive` export
+    of the same files all give the same digest."""
+    shas = {}
+    for rel in sorted({f for fs in deps.values() for f in fs}):
+        with open(os.path.join(repo, rel), "rb") as fh:
+            shas[rel] = hashlib.sha256(fh.read()).hexdigest()
+    digests = {}
+    for name, files in deps.items():
+        h = hashlib.sha256()
+        for rel in sorted(files):
+            h.update(f"{rel}\0{shas[rel]}\n".encode())
+        digests[name] = h.hexdigest()
+    return digests, shas
+
+
+def stale_parity_stamps(
+    repo: str = REPO, parity_path: str | None = None
+) -> dict[str, dict]:
+    """Live entries whose parity stamps do not prove the checked-out
+    tree: at some scale the record is missing, carries no
+    `tree_digest`, or carries one that differs from the digest of the
+    entry's dependency files as they are now (r14 verdict item 7: a
+    stamp proves the TREE it ran on — the j18/p3/s2 race). Maps each
+    such entry to {"scales": the failing scales, "files": the
+    dependency files its digest covers}.
+
+    parity_path defaults to the repo's PARITY.json. Re-prove with the
+    sweep as the last step before the commit:
     for sf in 0.001 0.01 0.1; do TEST_SF_DIR=/root/testdata/sf$sf \\
-      python -m pytest tests/test_parity.py --parity-report -k <entry>;
+      python -m pytest tests/test_parity.py --parity-report [-k <entry>];
     done"""
-    import subprocess
-    from datetime import datetime, timezone
-
-    ledger = build_ledger(repo)
+    if parity_path is None:
+        parity_path = os.path.join(repo, "PARITY.json")
+    with open(parity_path, encoding="utf-8") as fh:
+        scales = json.load(fh).get("scales", {})
+    if not scales:
+        raise ValueError(f"{parity_path} records no parity sweep")
     deps = entry_dependency_files(repo)
-    # one git call per distinct file set is wasteful; one per FILE is
-    # cached and the sets overlap heavily
-    file_ts: dict[str, float] = {}
-
-    def _newest_commit_ts(path: str) -> float:
-        if path not in file_ts:
-            out = subprocess.run(
-                ["git", "log", "-1", "--format=%ct", "--", path],
-                cwd=repo,
-                capture_output=True,
-                text=True,
-            ).stdout.strip()
-            file_ts[path] = float(out) if out else 0.0
-        return file_ts[path]
-
+    digests, _ = entry_digests(deps, repo)
     stale = {}
-    for name, proved in ledger["parity_proved"].items():
-        if name not in deps:
-            continue  # retired entry
-        stamp = datetime.strptime(
-            proved, "%Y-%m-%dT%H:%M:%SZ"
-        ).replace(tzinfo=timezone.utc).timestamp()
-        newest, newest_file = 0.0, None
-        for f in deps[name]:
-            ts = _newest_commit_ts(f)
-            if ts > newest:
-                newest, newest_file = ts, f
-        if newest > stamp:
-            stale[name] = {
-                "proved": proved,
-                "newest_commit_ts": newest,
-                "newest_file": newest_file,
-            }
+    for name in sorted(deps):
+        bad = sorted(
+            sc
+            for sc, rec in scales.items()
+            if rec["entries"].get(name, {}).get("tree_digest")
+            != digests[name]
+        )
+        if bad:
+            stale[name] = {"scales": bad, "files": deps[name]}
     return stale
 
 
@@ -292,8 +307,10 @@ def render_section(ledger: dict) -> str:
         "These rest on the local three-scale hash-parity sweep "
         "(`PARITY.json`, same canonicalization and hash as the driver's "
         "gate). `parity proved` is the OLDEST of the entry's three "
-        "per-scale stamps — if it predates the round's last source "
-        "commit, refresh the sweep.",
+        "per-scale stamps. Each stamp also records a digest of the "
+        "entry's dependency files; when any scale's digest differs from "
+        "the checked-out tree, `tests/test_coverage_ledger.py` fails "
+        "and the sweep must be re-run.",
         "",
         "| entry | parity proved (oldest scale) |",
         "|---|---|",

@@ -23,10 +23,13 @@ def pytest_addoption(parser):
         help=(
             "Persist per-entry parity evidence (rows + driver-style "
             "value hash) from test_parity.py, merged into PATH keyed "
-            "by the TEST_SF_DIR scale. Regenerate all three scales "
-            "with: for sf in 0.001 0.01 0.1; do TEST_SF_DIR=/root/"
-            "testdata/sf$sf python -m pytest tests/test_parity.py "
-            "--parity-report; done"
+            "by the TEST_SF_DIR scale. Each record carries the digest "
+            "of the entry's dependency files taken at session start; "
+            "the run writes nothing and fails if those files change "
+            "before it ends. Run it as the last step before the "
+            "commit, once per scale directory (sf0.001, sf0.01, "
+            "sf0.1): TEST_SF_DIR=<data root>/sf<N> python -m pytest "
+            "tests/test_parity.py --parity-report"
         ),
     )
 
@@ -35,29 +38,53 @@ def pytest_addoption(parser):
 def parity_recorder(request):
     """Collects {entry: evidence} during a test_parity run; merged into
     the --parity-report JSON (keyed by scale) at session end. A no-op
-    callable when the flag is absent."""
+    callable when the flag is absent.
+
+    Each record carries the entry's `tree_digest`
+    (`coverage_ledger.entry_digests`), taken at session start from the
+    working tree: the proof is tied to the exact bytes it ran on, and
+    `tests/test_coverage_ledger.py` fails once the checked-out tree no
+    longer matches. If any dependency file changes while the sweep
+    runs, the digests no longer name the tree that was proved, so the
+    session fails at teardown and nothing is written."""
     path = request.config.getoption("--parity-report")
-    records: dict[str, dict] = {}
+    if not path:
+        yield lambda name, evidence: None
+        return
 
     import json
     from datetime import datetime, timezone
 
+    from coverage_ledger import entry_dependency_files, entry_digests
+
+    digests, shas = entry_digests(entry_dependency_files())
+    records: dict[str, dict] = {}
+
     def _now() -> str:
-        # Full UTC timestamp, not just a date (r12 verdict item 1): the
-        # staleness check is "proved >= the snapshot commit's
-        # timestamp", and a same-day edit after a same-day refresh is
-        # exactly the case a date-only stamp cannot distinguish.
+        # Full UTC timestamp, not just a date: a reader of the ledger
+        # can tell a same-day refresh from the standing evidence.
+        # Freshness itself is proved by tree_digest, not by this time.
         return datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
 
     def record(name: str, evidence: dict) -> None:
         # Per-entry stamp: a merged file can hold records proved at
         # different times, so file-level "generated" alone can't speak
         # for each entry's freshness (ADVICE r8).
-        records[name] = dict(evidence, proved=_now())
+        records[name] = dict(evidence, proved=_now(), tree_digest=digests[name])
 
-    yield record if path else (lambda name, evidence: None)
-    if not path or not records:
+    yield record
+    if not records:
         return
+    digests_now, shas_now = entry_digests(entry_dependency_files())
+    if digests_now != digests:
+        changed = sorted(
+            f for f in shas.keys() | shas_now.keys()
+            if shas.get(f) != shas_now.get(f)
+        )
+        pytest.fail(
+            "dependency files changed during the parity sweep; "
+            f"{path} not written — re-run the sweep: {changed}"
+        )
 
     merged = {}
     if os.path.exists(path):
