@@ -100,12 +100,8 @@ def build_ledger(repo: str = REPO, drop_max_round: bool = False) -> dict:
 PKG = "trace_data_pipeline_spark"
 
 
-def _import_graph(repo: str) -> tuple[dict[str, set[str]], dict[str, str]]:
-    """repo-internal import graph: package module name -> set of
-    package module names it imports (ast over every package file, so
-    function-level imports count too)."""
-    import ast as _ast
-
+def _package_files(repo: str) -> dict[str, str]:
+    """Package module name -> path of its source file."""
     files = {}
     for root, _dirs, names in os.walk(os.path.join(repo, PKG)):
         for n in names:
@@ -116,6 +112,16 @@ def _import_graph(repo: str) -> tuple[dict[str, set[str]], dict[str, str]]:
                 if mod.endswith(".__init__"):
                     mod = mod[: -len(".__init__")]
                 files[mod] = path
+    return files
+
+
+def _import_graph(repo: str) -> tuple[dict[str, set[str]], dict[str, str]]:
+    """repo-internal import graph: package module name -> set of
+    package module names it imports (ast over every package file, so
+    function-level imports count too)."""
+    import ast as _ast
+
+    files = _package_files(repo)
     graph: dict[str, set[str]] = {m: set() for m in files}
 
     def _resolve(base: str) -> list[str]:
@@ -166,6 +172,53 @@ def _import_graph(repo: str) -> tuple[dict[str, set[str]], dict[str, str]]:
         if dep == f"{PKG}.plans" or dep.startswith(f"{PKG}.plans."):
             cat.discard(dep)
     return graph, files
+
+
+def unconsumed_definitions(repo: str = REPO) -> list[str]:
+    """Undecorated top-level `def`/`class` definitions of the package
+    whose name no production file uses, as sorted "<module>.<name>"
+    strings (module relative to the package). Production files are the
+    package, `perfbench/`, `bench.py` and `__spark_entry__.py`; a use is
+    a `Name`, an `Attribute`, an `ImportFrom` alias or an
+    identifier-shaped string constant (a `getattr` or registry key).
+    Decorated definitions count as consumed: `@register` and
+    `@atexit.register` are their consumers. The ROADMAP rule this
+    enforces: no library code without a consumer in the catalog or the
+    runner; a name that only tests use is reported."""
+    import ast as _ast
+
+    files = _package_files(repo)
+    consumers = list(files.values()) + [
+        os.path.join(repo, f) for f in ("bench.py", "__spark_entry__.py")
+    ]
+    for root, _dirs, names in os.walk(os.path.join(repo, "perfbench")):
+        consumers += [os.path.join(root, n) for n in names if n.endswith(".py")]
+
+    trees = {}
+    for path in consumers:
+        with open(path, encoding="utf-8") as fh:
+            trees[path] = _ast.parse(fh.read(), path)
+    used: set[str] = set()
+    for tree in trees.values():
+        for node in _ast.walk(tree):
+            if isinstance(node, _ast.Name):
+                used.add(node.id)
+            elif isinstance(node, _ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, _ast.ImportFrom):
+                used.update(a.name for a in node.names)
+            elif isinstance(node, _ast.Constant) and isinstance(node.value, str):
+                if node.value.isidentifier():
+                    used.add(node.value)
+    defs = (_ast.FunctionDef, _ast.AsyncFunctionDef, _ast.ClassDef)
+    return sorted(
+        f"{mod[len(PKG) + 1:] or mod}.{node.name}"
+        for mod, path in files.items()
+        for node in trees[path].body
+        if isinstance(node, defs)
+        and not node.decorator_list
+        and node.name not in used
+    )
 
 
 def entry_dependency_files(repo: str = REPO) -> dict[str, list[str]]:

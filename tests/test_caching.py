@@ -122,6 +122,62 @@ def test_scoped_caches_releases_only_inner_frames(spark):
     assert not outer.storageLevel.useMemory
 
 
+class _FailingFrame:
+    """A tracked frame whose unpersist raises `exc`: the stopped-session
+    path without stopping the shared session. On a real stopped session
+    unpersist raises Py4JJavaError (a Py4JError) and the context's
+    `_jsc` is None."""
+
+    def __init__(self, session, exc):
+        self.sparkSession = session
+        self._exc = exc
+
+    def persist(self):
+        return self
+
+    def unpersist(self):
+        raise self._exc
+
+
+class _StoppedSession:
+    class sparkContext:
+        _jsc = None
+
+
+def test_release_skips_stopped_session_frames_only(spark):
+    """release_caches skips a frame whose session is gone (Py4JError)
+    and still frees the live ones; it skips the RDD sweep of a stopped
+    context; any other error propagates."""
+    from py4j.protocol import Py4JError
+
+    release_caches()
+    tracked_persist(_FailingFrame(spark, Py4JError("stopped")))
+    live = tracked_persist(spark.range(10))
+    live.count()
+    assert release_caches() == 1
+    assert not live.storageLevel.useMemory
+
+    tracked_persist(_FailingFrame(_StoppedSession(), Py4JError("stopped")))
+    assert release_caches() == 0
+
+    tracked_persist(_FailingFrame(spark, ValueError("not a stopped session")))
+    with pytest.raises(ValueError):
+        release_caches()
+    assert release_caches() == 0
+
+
+def test_scoped_caches_skips_stopped_session_frames_only(spark):
+    from py4j.protocol import Py4JError
+
+    from trace_data_pipeline_spark.operators.caching import scoped_caches
+
+    with scoped_caches():
+        tracked_persist(_FailingFrame(spark, Py4JError("stopped")))
+    with pytest.raises(ValueError), scoped_caches():
+        tracked_persist(_FailingFrame(spark, ValueError("not a stopped session")))
+    assert release_caches() == 0  # scoped frames never reach the registry
+
+
 def test_cc_raises_on_path_beyond_jump_reach(spark):
     """Adversarial topology at the d18 CALL SITE's max_iter=8 (r4
     verdict item 5): alternating large/small-star needs

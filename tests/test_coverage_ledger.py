@@ -84,3 +84,52 @@ def test_stale_parity_stamps_reports_tampered_entries(tmp_path):
         removed: [last],
     }
     assert stale[altered]["files"] == entry_dependency_files()[altered]
+
+
+# Package definitions that no catalog entry, runner stage, perfbench
+# workload or bench.py path uses, each kept on purpose.
+KEPT = {
+    "datapipe.jpeg.encode_jpeg_color":
+        "fixture encoder for the colour-decoder tests (the gray encoder "
+        "builds catalog fixtures)",
+    "functions.nyse_calendar.nyse_sessions":
+        "driver-side session list the calendar tests check the JVM "
+        "calendar against",
+    "operators.bond_math._sums":
+        "numpy cash-flow kernel the w10h oracle fragment is tested "
+        "symmetric with",
+    "operators.caching.scoped_caches":
+        "thread-scoped cache release whose only caller, the streaming "
+        "corpus sink, is deleted; removing it also edits tracked_persist, "
+        "which persisting catalog builders call (ROADMAP direction 6)",
+    "plans.settings.build_stage0":
+        "the reference's stage-0 config switchboard as a dataclass; "
+        "run.py does not import it",
+    "reports.rasterize.legend_bbox":
+        "legend rectangle the figure tests blank before checking series "
+        "colours",
+    "sources.external.fetch":
+        "S9-S12 download step; offline runs pre-seed its cache",
+    "sources.external.ff_industry_table": "S9-S12 reference-data reader",
+    "sources.external.read_tenor_curve": "S9-S12 reference-data reader",
+    "sources.external.read_zip_member": "S9-S12 reference-data reader",
+    "sources.external.read_zip_text": "S9-S12 reference-data reader",
+    "sources.xlsx.liu_wu_curve": "S9-S12 reference-data reader",
+    "sql.register_views": "the spark.sql surface over tables and entries",
+    "streaming.kafka.kafka_json_stream":
+        "live-broker adapter; needs the spark-sql-kafka connector, which "
+        "the project does not ship",
+}
+
+
+def test_no_unconsumed_library_code():
+    """ROADMAP north star: no library code without a consumer in the
+    catalog or the runner. A new definition that only tests use fails
+    here; so does a KEPT entry that gained a consumer or was deleted."""
+    from coverage_ledger import unconsumed_definitions
+
+    found = set(unconsumed_definitions())
+    assert found == set(KEPT), (
+        f"unconsumed, not in KEPT: {sorted(found - set(KEPT))}; "
+        f"in KEPT, no longer unconsumed: {sorted(set(KEPT) - found)}"
+    )

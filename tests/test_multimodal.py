@@ -16,7 +16,6 @@ from trace_data_pipeline_spark.datapipe.multimodal import (
     FEATURE_DIM,
     decode_image,
     extract_features,
-    resize_images,
 )
 
 
@@ -47,27 +46,6 @@ def test_extract_features_shape_and_determinism(spark):
     want0 = hashlib.md5(b"payload-a").digest()[0] / 256.0
     assert abs(out[0].features[0] - want0) < 1e-9
     assert out[2].n_bytes == 0
-
-
-def test_resize_geometry_is_jvm_side(spark):
-    m = _media(
-        spark,
-        [
-            (1, b"wide", ("image/png", 1024, 512, None)),  # downscale 4x
-            (2, b"tall", ("image/png", 100, 400, None)),  # downscale /256 on h
-            (3, b"small", ("image/png", 64, 48, None)),  # never upscaled
-            (4, b"nometa", ("image/png", None, None, None)),  # pass-through
-        ],
-    )
-    out = {r.media_id: r for r in resize_images(m, max_side=256).collect()}
-    assert (out[1].out_width, out[1].out_height) == (256, 128)
-    assert (out[2].out_width, out[2].out_height) == (64, 256)
-    assert (out[3].out_width, out[3].out_height) == (64, 48)
-    assert (out[4].out_width, out[4].out_height) == (None, None)
-    # payload transform is the tagged content hash (stub contract)
-    assert out[1].payload == hashlib.md5(b"wide").digest() + (256).to_bytes(
-        4, "big"
-    ) + (128).to_bytes(4, "big")
 
 
 # ---- real PNG codec ----------------------------------------------------
@@ -236,31 +214,6 @@ def test_extract_features_real_png_kernel(spark):
 
     d = hashlib.md5(b"not-an-image").digest()
     assert got[2]["features"][0] == pytest.approx(d[0] / 256.0)
-
-
-def test_resize_images_real_png_path(spark):
-    """PNG payloads come back as decodable PNGs at the target geometry
-    with nearest-neighbor-sampled pixels."""
-    from trace_data_pipeline_spark.datapipe.multimodal import resize_images
-    from trace_data_pipeline_spark.datapipe.png import decode_png, encode_png
-
-    w, h = 8, 4
-    px = bytes((x * 31 + y * 17) % 256 for y in range(h) for x in range(w))
-    rows = [(1, encode_png(px, w, h, 1), ("image/png", w, h, None))]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, payload binary,"
-        " meta struct<mime:string,width:int,height:int,duration_ms:int>",
-    )
-    out = resize_images(media, max_side=4).collect()[0]
-    assert (out["out_width"], out["out_height"]) == (4, 2)
-    gw, gh, gch, gpx = decode_png(bytes(out["payload"]))
-    assert (gw, gh, gch) == (4, 2, 1)
-    # nearest-neighbor: out(ox,oy) = src(ox*8//4, oy*4//2)
-    expected = bytes(
-        ((ox * 2) * 31 + (oy * 2) * 17) % 256 for oy in range(2) for ox in range(4)
-    )
-    assert bytes(gpx) == expected
 
 
 # ------------------------------------------------------------- JPEG (r5)
@@ -714,43 +667,6 @@ def test_jpeg_color_features_via_router(spark):
     # all three channels constant 50
     for c in range(3):
         assert f[4 + 3 * c : 7 + 3 * c] == [50.0, 50.0, 50.0]
-
-
-def test_resize_real_jpeg_roundtrip(spark):
-    """resize_images now resizes baseline JPEGs for real: downscale a
-    16x16 constant-block grayscale JPEG to 8x8 and a color one to
-    4:4:4 — the output payload is a decodable JPEG of the target
-    geometry whose pixels match the nearest-neighbor resample."""
-    from trace_data_pipeline_spark.datapipe.jpeg import (
-        decode_jpeg,
-        encode_jpeg_color,
-        encode_jpeg_gray,
-    )
-    from trace_data_pipeline_spark.datapipe.multimodal import resize_images
-
-    # 2x2 block grid of constants -> any nearest-neighbor 8x8 output
-    # samples within constant regions, so pixels stay exact
-    blocks = [[40, 200], [90, 10]]
-    px = bytes(blocks[y // 8][x // 8] for y in range(16) for x in range(16))
-    gray = encode_jpeg_gray(16, 16, px)
-    rgbc = bytes(v for y in range(16) for x in range(16) for v in (77, 77, 77))
-    color = encode_jpeg_color(16, 16, rgbc, (1, 1))
-    m = _media(spark, [
-        (1, gray, ("image/jpeg", 16, 16, None)),
-        (2, color, ("image/jpeg", 16, 16, None)),
-    ])
-    out = {r.media_id: r for r in resize_images(m, max_side=8).collect()}
-    w, h, ch, rp = decode_jpeg(out[1].payload)
-    assert (w, h, ch) == (8, 8, 1)
-    # nearest-neighbor of the 2x2 constant grid at half scale; the
-    # resized frame's 8x8 block is no longer constant, so the re-encode
-    # carries quant=1 AC rounding (|err| <= 2)
-    want = bytes(blocks[(2 * y) // 8][(2 * x) // 8]
-                 for y in range(8) for x in range(8))
-    assert max(abs(a - b) for a, b in zip(rp, want)) <= 2
-    w2, h2, ch2, rp2 = decode_jpeg(out[2].payload)
-    assert (w2, h2, ch2) == (8, 8, 3)
-    assert bytes(rp2) == bytes([77] * 192)
 
 
 def test_jpeg_restart_intervals():

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from tests.conftest import TEST_SF_DIR
 from trace_data_pipeline_spark.operators.skew import (
     salted_aggregate,
-    salted_join,
     skewed_key_split_join,
     top_frequent_keys,
 )
@@ -44,19 +43,6 @@ def test_salted_aggregate_equals_plain(spark):
     assert _sorted_pdf(plain).equals(_sorted_pdf(salted))
 
 
-def test_salted_join_equals_plain(spark):
-    li = load_table(spark, TEST_SF_DIR, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_suppkey"
-    )
-    sup = load_table(spark, TEST_SF_DIR, "supplier").select("s_suppkey", "s_name")
-    plain = li.join(sup.withColumnRenamed("s_suppkey", "l_suppkey"), ["l_suppkey"])
-    salted = salted_join(
-        li, sup.withColumnRenamed("s_suppkey", "l_suppkey"), ["l_suppkey"], salts=8
-    )
-    assert plain.count() == salted.count()
-    assert _sorted_pdf(plain).equals(_sorted_pdf(salted))
-
-
 def test_hot_cold_split_join_equals_plain(spark):
     li = load_table(spark, TEST_SF_DIR, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_suppkey"
@@ -81,15 +67,9 @@ def test_salt_is_deterministic(spark):
 
 def test_split_and_salted_joins_reject_small_side_preserving(spark):
     """Small-side-preserving joins would emit small rows from both legs
-    (split) or once per salt replica (salted) — both must refuse, and
-    the guard must accept every Spark alias of the valid types
-    (round-12 review)."""
+    of the split join — it must refuse them, and the guard must accept
+    every Spark alias of the valid types (round-12 review)."""
     import pytest
-
-    from trace_data_pipeline_spark.operators.skew import (
-        salted_join,
-        skewed_key_split_join,
-    )
 
     big = spark.createDataFrame([(1, "x")], "k int, a string")
     small = spark.createDataFrame([(1, "y"), (2, "z")], "k int, b string")
@@ -97,12 +77,9 @@ def test_split_and_salted_joins_reject_small_side_preserving(spark):
     for how in ("right", "full", "outer", "right_outer", "full_outer"):
         with pytest.raises(ValueError, match="preserve the small side"):
             skewed_key_split_join(big, small, ["k"], hot_keys=hot, how=how)
-        with pytest.raises(ValueError, match="preserve the small side"):
-            salted_join(big, small, ["k"], how=how)
     # aliases of the valid big-side-preserving types must pass
     for how in ("semi", "leftsemi", "left_semi", "anti", "leftanti",
                 "leftouter", "left"):
-        assert salted_join(big, small, ["k"], how=how).count() >= 0
         assert (
             skewed_key_split_join(
                 big, small, ["k"], hot_keys=hot, how=how

@@ -119,83 +119,6 @@ def test_audit_ledger_counts(spark):
         assert later["rows_before"] == earlier["rows_after"]
 
 
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionizer over time-ordered micro-batch
-    drops == batch lag+cumsum sessionization, for every CLOSED session
-    (each user's final session is still open in stream state)."""
-    from pyspark.sql import Window
-
-    from trace_data_pipeline_spark.streaming.sessions import streaming_sessionize
-
-    ev = load_table(spark, TEST_SF_DIR, "events").select("ts", "user_id", "event_id")
-
-    # three drops split by event-time terciles: replay preserves each
-    # user's time order across micro-batches (the operator's contract)
-    lo, hi = ev.selectExpr(
-        "percentile(unix_micros(ts), 0.33)", "percentile(unix_micros(ts), 0.66)"
-    ).first()
-    us = F.unix_micros("ts")
-    drops = [
-        ev.filter(us <= F.lit(int(lo))),
-        ev.filter((us > F.lit(int(lo))) & (us <= F.lit(int(hi)))),
-        ev.filter(us > F.lit(int(hi))),
-    ]
-    src = os.path.join(str(tmp_path), "sess_drops")
-    for i, d in enumerate(drops):
-        p = os.path.join(src, f"drop_{i}.parquet")
-        d.write.mode("overwrite").parquet(p)
-        # file-source replays in mtime order — make it deterministic
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                os.utime(os.path.join(root, f), (1_000_000 + i, 1_000_000 + i))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "*"))
-    )
-    q = (
-        streaming_sessionize(stream)
-        .writeStream.format("memory")
-        .queryName("sessions_test")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.sql("SELECT * FROM sessions_test").toPandas()
-
-    # batch twin: same gap/tiebreak; drop each user's last session
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-    new_s = F.when(gap.isNull() | (gap > 1800 * 1_000_000), 1).otherwise(0)
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = ev.withColumn("sid", F.sum(new_s).over(cum))
-    agg = sess.groupBy("user_id", "sid").agg(
-        F.min(F.unix_micros("ts")).alias("session_start_us"),
-        F.max(F.unix_micros("ts")).alias("session_end_us"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("event_id").alias("first_event"),
-    )
-    last_sid = Window.partitionBy("user_id")
-    want = (
-        agg.withColumn("max_sid", F.max("sid").over(last_sid))
-        .filter(F.col("sid") != F.col("max_sid"))
-        .drop("sid", "max_sid")
-        .toPandas()
-    )
-
-    key = ["user_id", "session_start_us"]
-    got = got.sort_values(key).reset_index(drop=True)[sorted(got.columns)]
-    want = want.sort_values(key).reset_index(drop=True)[sorted(want.columns)]
-    assert len(got) > 0, "no closed sessions emitted"
-    assert got.astype("int64").equals(want.astype("int64")), (
-        f"stream sessions != batch sessions\n{got.head()}\n{want.head()}"
-    )
-
-
 def test_streaming_dedup_drops_redelivered_rows(spark, tmp_path):
     """At-least-once replay: drop 2 re-delivers half of drop 1's rows.
     The watermarked stream dedup must emit exactly the batch
@@ -237,38 +160,6 @@ def test_streaming_dedup_drops_redelivered_rows(spark, tmp_path):
         f"stream emitted {len(got)} rows, batch distinct has {n_events}"
     )
     assert got["event_id"].is_unique
-
-
-def test_foreachbatch_sink_is_idempotent(spark, tmp_path):
-    """Exactly-once recipe: per-batch-id overwrite directories. A
-    replayed micro-batch (at-least-once delivery) rewrites its own
-    partition instead of appending duplicates."""
-    from trace_data_pipeline_spark.streaming.sinks import idempotent_parquet_writer
-
-    ev = load_table(spark, TEST_SF_DIR, "events").select("ts", "user_id", "value")
-    src = os.path.join(str(tmp_path), "fb_drops")
-    for i in range(2):
-        ev.filter(F.col("user_id") % 2 == i).write.mode("overwrite").parquet(
-            os.path.join(src, f"drop_{i}.parquet")
-        )
-    out = os.path.join(str(tmp_path), "fb_out")
-    writer = idempotent_parquet_writer(out)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "*"))
-    )
-    q = stream.writeStream.foreachBatch(writer).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = spark.read.parquet(out)
-    n_first = got.count()
-    assert n_first == ev.count()
-    # simulate an at-least-once redelivery of batch 0
-    writer(ev.filter(F.col("user_id") % 2 == 0), 0)
-    assert spark.read.parquet(out).count() == n_first
 
 
 def test_kafka_wire_decode_batch_and_stream(spark, tmp_path):
@@ -329,146 +220,6 @@ def test_kafka_source_raises_clearly_without_connector(spark):
 
     with _pytest.raises(RuntimeError, match="spark-sql-kafka"):
         kafka_json_stream(spark, "trades", "localhost:9092")
-
-
-def test_streaming_incremental_dedup_keeps_corpus_clean(spark, tmp_path):
-    """Streamed ingest through incremental_dedup_sink: batch-internal
-    exact dups collapse, rows matching the standing corpus (exactly or
-    as LSH-verified near-dups) drop, survivors append and screen LATER
-    micro-batches — and a replayed batch adds nothing."""
-    from trace_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
-
-    corpus = str(tmp_path / "corpus")
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    uniq = "one two three four five six seven eight nine ten eleven"
-    sink = incremental_dedup_sink(corpus, verify_threshold=0.4)
-
-    b0 = spark.createDataFrame(
-        [(1, base), (2, uniq), (3, base)],  # 3 = within-batch exact dup of 1
-        "doc_id long, text string",
-    )
-    sink(b0, 0)
-    got0 = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    assert got0 == {1, 2}
-
-    b1 = spark.createDataFrame(
-        [
-            (10, base),                               # exact dup of corpus 1
-            (11, base + " extra"),                    # near-dup of corpus 1
-            (12, "totally different words here now"), # fresh
-        ],
-        "doc_id long, text string",
-    )
-    sink(b1, 1)
-    got1 = {r.doc_id for r in spark.read.parquet(corpus).collect()}
-    assert got1 == {1, 2, 12}
-
-    sink(b1, 1)  # replay: exact matches of corpus rows, nothing added
-    got2 = [r.doc_id for r in spark.read.parquet(corpus).collect()]
-    assert sorted(got2) == [1, 2, 12]
-
-
-def test_streaming_incremental_dedup_rejects_id_conflicts(spark, tmp_path):
-    """Same id + same text is a benign replay (dropped); same id with
-    DIFFERENT text would corrupt the id-keyed near-dup screen and must
-    raise instead of silently matching the wrong text."""
-    import pytest as _pytest
-
-    from trace_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
-
-    corpus = str(tmp_path / "corpus")
-    sink = incremental_dedup_sink(corpus)
-    sink(spark.createDataFrame([(1, "alpha beta gamma delta")],
-                               "doc_id long, text string"), 0)
-    with _pytest.raises(ValueError, match="DIFFERENT text"):
-        sink(spark.createDataFrame([(1, "completely other words")],
-                                   "doc_id long, text string"), 1)
-
-
-# ------------------------------------------------- crash recovery (r5)
-
-
-def test_incremental_dedup_sink_recovers_from_killed_bootstrap(spark, tmp_path):
-    """Killed-mid-bootstrap simulation: the corpus directory EXISTS but
-    holds only uncommitted debris (`_temporary/` task files, hidden
-    partials) — exactly what a bootstrap job that died before commit
-    leaves behind. On replay the sink must take the bootstrap branch
-    again (committed-data gate, ADVICE r4), not try to read a
-    footer-less directory and wedge every subsequent batch."""
-    from trace_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
-
-    corpus = str(tmp_path / "corpus")
-    # fake the debris of a killed job: dir exists, nothing committed
-    os.makedirs(os.path.join(corpus, "_temporary", "0", "task_000"))
-    with open(os.path.join(corpus, "_temporary", "0", "task_000",
-                           "part-00000.parquet"), "wb") as f:
-        f.write(b"\x00" * 16)  # not even a valid parquet footer
-    with open(os.path.join(corpus, ".part-00000.crc"), "wb") as f:
-        f.write(b"\x00")
-
-    sink = incremental_dedup_sink(corpus)
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "one two three four")],
-        "doc_id long, text string",
-    )
-    sink(b0, 0)  # replayed bootstrap batch
-    got = sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
-    assert got == [1, 2]
-    # debris replaced by the committed bootstrap, later batches read fine
-    sink(
-        spark.createDataFrame(
-            [(3, "totally different words here")], "doc_id long, text string"
-        ),
-        1,
-    )
-    got = sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
-    assert got == [1, 2, 3]
-
-
-def test_incremental_dedup_sink_double_replay_no_duplicates(spark, tmp_path):
-    """At-least-once redelivery after a crash BETWEEN corpus append and
-    checkpoint commit: the same micro-batch runs twice, including the
-    bootstrap batch itself. No corpus row may appear twice."""
-    from trace_data_pipeline_spark.streaming.dedup import incremental_dedup_sink
-
-    corpus = str(tmp_path / "corpus")
-    sink = incremental_dedup_sink(corpus)
-    b0 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "one two three four")],
-        "doc_id long, text string",
-    )
-    b1 = spark.createDataFrame(
-        [(3, "fresh unrelated content words")], "doc_id long, text string"
-    )
-    sink(b0, 0)
-    sink(b0, 0)  # bootstrap batch replayed post-commit: benign id replays
-    assert sorted(r.doc_id for r in spark.read.parquet(corpus).collect()) == [1, 2]
-    sink(b1, 1)
-    sink(b1, 1)  # append batch replayed
-    rows = [r.doc_id for r in spark.read.parquet(corpus).collect()]
-    assert sorted(rows) == [1, 2, 3]  # each id exactly once
-
-
-def test_idempotent_parquet_writer_overwrites_crashed_batch(spark, tmp_path):
-    """Exactly-once parquet sink under replay: a batch directory left
-    half-written by a killed attempt is fully REPLACED when foreachBatch
-    redelivers the same batch_id — reading the sink output yields each
-    row exactly once."""
-    from trace_data_pipeline_spark.streaming.sinks import idempotent_parquet_writer
-
-    out = str(tmp_path / "out")
-    writer = idempotent_parquet_writer(out)
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-
-    # crashed first attempt: partial junk where batch 0 will land
-    os.makedirs(os.path.join(out, "batch_id=0", "_temporary"))
-    with open(os.path.join(out, "batch_id=0", "part-junk.parquet"), "wb") as f:
-        f.write(b"\x00" * 8)
-
-    writer(df, 0)
-    writer(df, 0)  # replay
-    got = sorted((r.id, r.v) for r in spark.read.parquet(out + "/batch_id=0").collect())
-    assert got == [(1, "a"), (2, "b")]
 
 
 def test_streaming_media_feature_extraction(spark, tmp_path):

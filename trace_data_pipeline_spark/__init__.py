@@ -13,8 +13,8 @@ Layout:
   functions   — scalar & ordered-aggregation helpers
   operators   — the reference's operator inventory (SURVEY.md §2)
   datapipe    — training-data pipeline operators (dedup/similarity/text)
-  streaming   — Structured Streaming: daily aggregation, stateful
-                sessionizer, exactly-once foreachBatch sink
+  streaming   — Structured Streaming: daily aggregation, watermark-
+                bounded exact dedup, Kafka source adapter
   plans       — the query catalog wired to the driver contract
   run         — pipeline runner CLI (python -m trace_data_pipeline_spark.run)
   sql         — temp-view layer exposing tables + queries to spark.sql

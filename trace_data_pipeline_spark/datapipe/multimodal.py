@@ -8,10 +8,9 @@ grayscale and YCbCr color (numpy Huffman+IDCT codec in
 `datapipe/jpeg.py`), PCM WAV audio
 (stdlib RIFF codec in `datapipe/wav.py`) and MJPEG AVI video (RIFF
 demux in `datapipe/avi.py` + the JPEG codec per frame): feature
-extraction measures actual pixels/samples/frames and resize
-re-samples and re-encodes them. Formats that need external codecs
-(progressive/CMYK JPEG, MP3/AAC, H.264/VP9) fall back to a
-clearly-marked deterministic fake kernel or null stats row, with
+extraction measures actual pixels/samples/frames. Formats that need
+external codecs (progressive/CMYK JPEG, MP3/AAC, H.264/VP9) fall back
+to a clearly-marked deterministic fake kernel or null stats row, with
 decode_image raising NotImplementedError at the documented boundary.
 
 At 100 TB the pattern is: keep binaries in their own column so parquet
@@ -147,98 +146,6 @@ def extract_features(
                 )
 
     return media.select("media_id", "payload").mapInPandas(run, FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("out_width", T.IntegerType(), True),
-        T.StructField("out_height", T.IntegerType(), True),
-    ]
-)
-
-
-def _fake_resize(payload: bytes, w: int, h: int) -> bytes:
-    """Deterministic stand-in for decode→resize→re-encode on payloads
-    with no codec: tags the content hash with the target geometry. The
-    operator contract (binary in, binary out, bounded batches) is what's
-    under test for those formats."""
-    digest = hashlib.md5(payload or b"").digest()
-    return digest + w.to_bytes(4, "big") + h.to_bytes(4, "big")
-
-
-def _resize_payload(payload: bytes, w: int, h: int) -> bytes:
-    """PNG and baseline JPEG rows resize for REAL: decode →
-    nearest-neighbor resample → re-encode in the source format
-    (grayscale/color JPEG re-encodes 4:4:4 at quant=1 — resampling is
-    the lossy step, the re-encode shouldn't add more); formats without
-    a codec (and in-scope-looking JPEGs that turn out
-    progressive/CMYK) keep the documented fake."""
-    from trace_data_pipeline_spark.datapipe.jpeg import (
-        encode_jpeg_color,
-        encode_jpeg_gray,
-        is_jpeg,
-    )
-    from trace_data_pipeline_spark.datapipe.png import (
-        encode_png,
-        is_png,
-        resize_nearest,
-    )
-
-    if w <= 0 or h <= 0:
-        return _fake_resize(payload, w, h)
-    if is_png(payload):
-        sw, sh, ch, px = decode_image(payload)
-        return encode_png(resize_nearest(px, sw, sh, ch, w, h), w, h, ch)
-    if is_jpeg(payload):
-        try:
-            sw, sh, ch, px = decode_image(payload)
-        except NotImplementedError:
-            return _fake_resize(payload, w, h)
-        resized = resize_nearest(px, sw, sh, ch, w, h)
-        if ch == 1:
-            return encode_jpeg_gray(w, h, resized)
-        return encode_jpeg_color(w, h, resized, (1, 1))
-    return _fake_resize(payload, w, h)
-
-
-def resize_images(media: DataFrame, max_side: int = 256, batch_size: int = 64) -> DataFrame:
-    """Aspect-preserving downscale plan. Target geometry is pure column
-    algebra (JVM, prunable, never upscales); only the pixel transform
-    crosses into Python, Arrow-batched with a small batch size because
-    decoded frames are orders of magnitude larger than their payloads.
-    Rows with no/degenerate geometry metadata pass through unresized."""
-    w = F.col("meta.width").cast("double")
-    h = F.col("meta.height").cast("double")
-    valid = w.isNotNull() & h.isNotNull() & (F.greatest(w, h) > 0)
-    scale = F.least(F.lit(1.0), F.lit(float(max_side)) / F.greatest(w, h))
-    sized = media.select(
-        "media_id",
-        "payload",
-        F.when(valid, F.greatest(F.round(w * scale).cast("int"), F.lit(1)))
-        .otherwise(F.col("meta.width"))
-        .alias("out_width"),
-        F.when(valid, F.greatest(F.round(h * scale).cast("int"), F.lit(1)))
-        .otherwise(F.col("meta.height"))
-        .alias("out_height"),
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), batch_size):
-                chunk = pdf.iloc[start : start + batch_size].copy()
-                chunk["payload"] = [
-                    _resize_payload(p, int(cw) if pd.notna(cw) else 0,
-                                    int(ch) if pd.notna(ch) else 0)
-                    if p is not None else None
-                    for p, cw, ch in zip(
-                        chunk["payload"], chunk["out_width"], chunk["out_height"]
-                    )
-                ]
-                yield chunk[["media_id", "payload", "out_width", "out_height"]]
-
-    return sized.mapInPandas(run, RESIZED_SCHEMA)
 
 
 def _row_kernel_runner(rows_for, batch_size: int):

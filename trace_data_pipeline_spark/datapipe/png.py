@@ -8,9 +8,8 @@ CRC. Supported: 8-bit depth, color types 0 (grey), 2 (RGB), 3
 raises ValueError — at 100 TB you want a loud skip-and-log row, not a
 silent wrong decode.
 
-The decoder feeds `multimodal.decode_image` / `extract_features` /
-`resize_images`; the encoder exists to re-encode resized frames and to
-synthesize verifiable fixtures."""
+The decoder feeds `multimodal.decode_image` / `extract_features`; the
+encoder renders report figures and synthesizes verifiable fixtures."""
 
 from __future__ import annotations
 

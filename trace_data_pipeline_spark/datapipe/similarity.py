@@ -40,10 +40,6 @@ def norm_f64(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(dot_f64(a, a, dim))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot_f64(a, b, dim) / (norm_f64(a, dim) * norm_f64(b, dim))
-
-
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,

@@ -151,38 +151,18 @@ def nyse_sessions_df(spark, start: dt.date, end: dt.date):
     return out
 
 
-def business_days_per_month(spark, start: str, end: str):
-    """Weekday (Mon–Fri) count per calendar month over [start, end] —
-    the quality report's expected-sessions denominator
+def business_days_per_month_from_bounds(bounds, lo: str = "lo", hi: str = "hi"):
+    """Weekday (Mon–Fri) count per calendar month over [lo, hi] — the
+    quality report's expected-sessions denominator
     (`stage1/helper_functions.py:1783-1812`,
     compute_business_days_per_month). The reference counts
     pd.bdate_range(freq='B') days: PLAIN weekdays, no holiday calendar
-    — deliberately distinct from nyse_sessions. One JVM-side sequence
-    expansion filtered by weekday, grouped by month; bounded by the
-    date span, never by data size."""
-    from pyspark.sql import functions as F
-
-    days = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.lit(start).cast("date"), F.lit(end).cast("date")
-            )
-        ).alias("d")
-    )
-    wd = F.dayofweek("d")  # 1=Sunday .. 7=Saturday
-    return (
-        days.filter((wd >= 2) & (wd <= 6))
-        .groupBy(F.date_format("d", "yyyy-MM").alias("year_month"))
-        .agg(F.count(F.lit(1)).alias("business_days"))
-    )
-
-
-def business_days_per_month_from_bounds(bounds, lo: str = "lo", hi: str = "hi"):
-    """Same weekday-per-month spine, but bounded by a 1-ROW DataFrame
-    of (lo, hi) dates instead of driver-side literals — the sequence
-    expands distributively off the aggregate, so callers need no
-    `.collect()` round-trip for the bounds (r14 verdict item 8: the
-    r10 bounds collect re-scanned the fact table at 100 TB)."""
+    — deliberately distinct from nyse_sessions. The span comes from a
+    1-ROW DataFrame of (lo, hi) dates, not driver-side literals: the
+    sequence expands distributively off the aggregate, so callers need
+    no `.collect()` round-trip for the bounds (r14 verdict item 8: the
+    r10 bounds collect re-scanned the fact table at 100 TB). Bounded by
+    the date span, never by data size."""
     from pyspark.sql import functions as F
 
     days = bounds.select(

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import threading
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
@@ -81,7 +82,7 @@ class scoped_caches:
         for df in self._frames:
             try:
                 df.unpersist()
-            except Exception:
+            except Py4JError:  # session already stopped — nothing to free
                 pass
         self._frames.clear()
         return False
@@ -114,21 +115,19 @@ def release_caches() -> int:
             spark = df.sparkSession
             df.unpersist()
             released += 1
-        except Exception:  # session already stopped — nothing to free
+        except Py4JError:  # session already stopped — nothing to free
             pass
-    try:
-        if spark is None:
-            from pyspark.sql import SparkSession
+    if spark is None:
+        from pyspark.sql import SparkSession
 
-            spark = SparkSession.getActiveSession()
-        if spark is not None:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rid in list(jmap.keySet().toArray()):
-                rdd = jmap.get(rid)
-                if rdd is not None:
-                    rdd.unpersist(False)
-    except Exception:  # session stopped mid-sweep — nothing to free
-        pass
+        spark = SparkSession.getActiveSession()
+    # a stopped session's context has dropped its Java handle
+    if spark is not None and spark.sparkContext._jsc is not None:
+        sc = spark.sparkContext
+        try:
+            unpersist_rdd_ids(sc, persistent_rdd_ids(sc))
+        except Py4JError:  # session stopped mid-sweep — nothing to free
+            pass
     return released
 
 

@@ -1,66 +1,21 @@
-"""Daily panel aggregation (SURVEY.md §2.4 A1–A3, §2.3 J9).
+"""Bid/ask daily panels (SURVEY.md §2.4 A3, §2.3 J9).
 
-The reference reduces intraday trades to one row per (cusip, day) with
-equal-/value-weighted prices, first/last/hi/lo, counts and volumes
-(`stage0/create_daily_enhanced_trace.py:165-391`), computing partial
-aggregates per CUSIP chunk and concatenating (A4). Here the whole thing
-is ONE hash aggregate: Spark's partial (map-side) + final aggregation
-replaces the chunk loop, and order-sensitive first/last become
-min_by/max_by over the full tiebreak key so results are deterministic
-under shuffle — the watch-list item in SURVEY.md §7.
+The reference splits each (cusip, day) into value-weighted bid and ask
+prices and merges the two side panels with an outer join
+(`stage0/create_daily_enhanced_trace.py:283-391`). The A1+A2 price
+panel is one hash aggregate written inline by `plans/relational.py::
+a1_daily_panel`; this module holds the A3 split that `a3_bid_ask`
+composes.
 
-Scale notes: a single groupBy on (id, date) — one shuffle, AQE-coalesced;
-no windows, no joins on the hot path. The bid/ask split (A3) is two
-filtered aggregations merged with an outer join on the same keys; the
-shuffle partitioning of the first aggregate is reused by the join.
+Scale notes: each side is a single groupBy on (id, date) — one shuffle,
+AQE-coalesced; the two filtered aggregations merge with an outer join
+on the same keys, reusing the shuffle partitioning of the aggregates.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from trace_data_pipeline_spark.functions.ordered import first_by, last_by
-
-
-def daily_price_panel(
-    trades: DataFrame,
-    id_col: str = "cusip_id",
-    date_col: str = "trd_exctn_dt",
-    price_col: str = "rptd_pr",
-    qty_col: str = "entrd_vol_qt",
-    order_cols: Sequence[str] = (),
-    par: float = 100.0,
-) -> DataFrame:
-    """A1+A2: per (id, date) price/volume metrics.
-
-    prc_vw   = Σ(p·dollar_vol)/Σ(dollar_vol)   (value-weighted)
-    prc_vw_par = Σ(p·qty)/Σ(qty)               (par-weighted)
-    dollar_vol = p·qty/par, volumes scaled to millions — matching
-    `create_daily_enhanced_trace.py:205-265`.
-    """
-    p = F.col(price_col)
-    q = F.col(qty_col)
-    dv = p * q / F.lit(par)
-    order = list(order_cols)
-
-    aggs = [
-        F.avg(p).alias("prc_ew"),
-        (F.sum(p * dv) / F.nullif(F.sum(dv), F.lit(0.0))).alias("prc_vw"),
-        (F.sum(p * q) / F.nullif(F.sum(q), F.lit(0.0))).alias("prc_vw_par"),
-        F.max(p).alias("prc_hi"),
-        F.min(p).alias("prc_lo"),
-        F.count(p).alias("trade_count"),
-        (F.sum(q) / F.lit(1e6)).alias("qvolume"),
-        (F.sum(dv) / F.lit(1e6)).alias("dvolume"),
-    ]
-    if order:
-        aggs.insert(3, first_by(p, *order).alias("prc_first"))
-        aggs.insert(4, last_by(p, *order).alias("prc_last"))
-
-    return trades.groupBy(F.col(id_col), F.col(date_col)).agg(*aggs)
 
 
 def value_weighted_side_panel(

@@ -1,18 +1,17 @@
-"""Skew-mitigation operators: salted aggregation and salted joins.
+"""Skew-mitigation operators: salted aggregation and hot/cold split joins.
 
 At 100 TB a handful of hot keys (a benchmark CUSIP, an empty-string
 id) can pin one reducer while the rest of the cluster idles. AQE's
 skew-join handling covers sort-merge joins; these helpers cover the
 two cases it doesn't: a skewed AGGREGATION key, and a skewed join
-against a replicable (but not broadcastable) side.
+whose hot keys fit in a broadcast slice of the small side.
 
 Both are semantics-preserving rewrites:
 - salted_aggregate: pre-aggregate on (keys, salt) — splitting each hot
   key across `salts` reducers — then finish on keys. Valid for any
   algebraic aggregate (sum/count/min/max).
-- salted_join: salt the big side deterministically and replicate the
-  small side once per salt value; the join key becomes (keys, salt),
-  so a hot key's rows spread over `salts` partitions.
+- skewed_key_split_join: hot-key rows join a broadcast slice of the
+  small side, the long tail takes the normal shuffle join.
 
 Salts are derived from row content (hash), never rand() — task retries
 must produce identical salts or shuffle replay breaks.
@@ -78,35 +77,6 @@ def salted_aggregate(
     return partial.groupBy(*keys).agg(*final_exprs)
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    keys: Sequence[str],
-    how: str = "inner",
-    salts: int = 8,
-) -> DataFrame:
-    """Equi-join with the big side's hot keys spread over `salts`
-    partitions; the small side is replicated ×salts (explode of a
-    literal range — cheap for dimension-sized frames).
-
-    Only big-side-preserving joins are valid: a small-side-preserving
-    `how` ('right'/'full') would emit each unmatched small-side row
-    once PER SALT (it exists in all replicas and matches in none)."""
-    if not _is_big_side_preserving(how):
-        raise ValueError(
-            f"salted_join cannot preserve the small side: how={how!r} "
-            "would duplicate unmatched small-side rows once per salt; "
-            f"use one of {sorted(_BIG_SIDE_PRESERVING)} (Spark aliases "
-            "of these, e.g. 'left_semi', are accepted too)"
-        )
-    big_s = with_salt(big, salts)
-    small_s = small.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
-    )
-    out = big_s.join(small_s, [*keys, "__salt"], how)
-    return out.drop("__salt")
-
-
 def top_frequent_keys(
     df: DataFrame, keys: Sequence[str], top_n: int = 10
 ) -> DataFrame:
@@ -126,11 +96,10 @@ def skewed_key_split_join(
     """Hot/cold split: rows with hot keys join against a broadcast
     slice of the small side; the long tail takes the normal shuffle
     join. Union of the two legs ≡ the plain join — ONLY for
-    big-side-preserving joins, hence the same guard as salted_join
-    (round-12 review): under 'right'/'full' a small-side row whose hot
-    key matches the big side would ALSO surface null-extended from the
-    cold leg, and an unmatched hot-key small row would surface from
-    both legs."""
+    big-side-preserving joins, hence the guard (round-12 review):
+    under 'right'/'full' a small-side row whose hot key matches the big
+    side would ALSO surface null-extended from the cold leg, and an
+    unmatched hot-key small row would surface from both legs."""
     if not _is_big_side_preserving(how):
         raise ValueError(
             f"skewed_key_split_join cannot preserve the small side: "

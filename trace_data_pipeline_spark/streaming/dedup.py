@@ -36,156 +36,3 @@ def streaming_exact_dedup(
         list(id_cols)
     )
 
-
-def _has_committed_data(fs, hpath) -> bool:
-    """True iff `hpath` holds COMMITTED parquet data: the directory
-    exists and contains a ``_SUCCESS`` marker or at least one VISIBLE
-    entry (name not starting with ``_``/``.`` — the Hadoop hidden-file
-    convention, which covers ``_temporary`` and ``_SUCCESS`` itself).
-    A directory left behind by a job that died before commit holds
-    only hidden entries and is NOT committed — the caller bootstraps
-    over it. The sink writes a flat (unpartitioned) parquet layout, so
-    a visible entry is always committed data or (under a v2 committer)
-    a partially committed file set — the latter is indistinguishable
-    from committed data at the filesystem level and is accepted."""
-    if not fs.exists(hpath):
-        return False
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name == "_SUCCESS" or not name.startswith(("_", ".")):
-            return True
-    return False
-
-
-def incremental_dedup_sink(
-    corpus_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    verify_threshold: float = 0.4,
-):
-    """foreachBatch sink for STREAMING corpus ingest: each micro-batch
-    is screened against the standing corpus parquet by the batch
-    `incremental_dedup` operator (content digest + cross-only
-    MinHash-LSH), and only the keepers append — so the corpus stays
-    dedup-clean as it grows, and later micro-batches are screened
-    against earlier survivors automatically.
-
-    Contract:
-    - within-batch EXACT duplicates collapse to the min id before the
-      corpus probe; within-batch NEAR duplicates are admitted together
-      (one micro-batch is one ingest unit — near-dup consolidation
-      across in-flight rows is the batch d18 operator's job);
-    - ids must be GLOBALLY UNIQUE across the corpus and every batch
-      (content-addressed or uuid); a batch reusing a corpus id is
-      rejected loudly — the near-dup screen keys on the id and a
-      collision would corrupt matching in both directions;
-    - the corpus is scanned per batch, never self-joined — the batch
-      side broadcasts (see `incremental_dedup`).
-
-    Returns the function to pass to `writeStream.foreachBatch`.
-    """
-    from pyspark.sql import functions as F
-
-    from trace_data_pipeline_spark.datapipe.dedup import incremental_dedup
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from trace_data_pipeline_spark.operators.caching import (
-            scoped_caches,
-            tracked_persist,
-        )
-
-        spark = batch_df.sparkSession
-        # collapse within-batch exact duplicates to the min id (the
-        # deterministic keeper, matching d1)
-        w_first = (
-            batch_df.groupBy(F.md5(F.col(text_col)).alias("__h"))
-            .agg(F.min(F.col(id_col)).alias(id_col))
-            .select(id_col)
-        )
-        batch = batch_df.join(w_first, id_col, "left_semi")
-        # bootstrap ONLY when the corpus holds no COMMITTED data yet —
-        # never on a read error: a transient failure (throttle, one bad
-        # footer, permissions blip) must surface, not silently
-        # OVERWRITE the accumulated corpus with one micro-batch. The
-        # probe goes through the HADOOP FileSystem of the path (NOT
-        # os.path — which only sees the driver's local POSIX tree and
-        # would take the bootstrap branch on every batch for an
-        # hdfs://, s3a:// or dbfs:/ corpus). And the gate is COMMITTED
-        # data, not bare fs.exists(): a bootstrap that died mid-write
-        # leaves the directory existing but holding only uncommitted
-        # `_temporary/` task files — a bare existence probe would then
-        # take the read branch forever (no parquet footers → every
-        # later batch fails) or screen a replayed batch against a
-        # partial copy of itself.
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(corpus_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not _has_committed_data(fs, hpath):
-            # overwrite is safe here by construction: the only thing it
-            # can replace is the uncommitted debris of a failed job
-            batch.write.mode("overwrite").parquet(corpus_path)
-            return
-        corpus = spark.read.parquet(corpus_path).select(id_col, text_col)
-        with scoped_caches():
-            # id-collision guard: the near-dup screen keys gram sets
-            # and bands by the id, so a batch doc REUSING a corpus id
-            # with DIFFERENT text would corrupt matching in both
-            # directions — refuse loudly. Same id + same text is the
-            # benign replay case (at-least-once redelivery of a row the
-            # corpus already holds) and is dropped up front.
-            # ONE corpus pass computes both the conflict count and the
-            # benign replay ids: the corpus inner-joins the BROADCAST
-            # batch (corpus scanned, never shuffled) down to a
-            # collision-sized overlap, which persists inside this scope.
-            # The replay drop then anti-joins against the broadcast
-            # overlap ids — an anti-join against the raw corpus id
-            # column would put the corpus on the non-broadcastable side
-            # and shuffle it whole every micro-batch.
-            overlap = tracked_persist(
-                corpus.join(
-                    F.broadcast(
-                        batch.select(id_col, F.col(text_col).alias("__bt"))
-                    ),
-                    id_col,
-                ).select(
-                    id_col,
-                    F.col(text_col).eqNullSafe(F.col("__bt")).alias("__same"),
-                )
-            )
-            conflicts = overlap.filter(~F.col("__same")).count()
-            if conflicts:
-                raise ValueError(
-                    f"batch {batch_id}: {conflicts} doc id(s) already "
-                    "exist in the corpus with DIFFERENT text — ids must "
-                    "be globally unique across corpus and batches"
-                )
-            batch = batch.join(
-                F.broadcast(overlap.filter(F.col("__same")).select(id_col)),
-                id_col,
-                "left_anti",
-            )
-            union = corpus.withColumn("__b", F.lit(False)).unionByName(
-                batch.select(id_col, text_col).withColumn("__b", F.lit(True))
-            )
-            flags = incremental_dedup(
-                union,
-                F.col("__b"),
-                text_col=text_col,
-                id_col=id_col,
-                n=n,
-                num_hashes=num_hashes,
-                bands=bands,
-                verify_threshold=verify_threshold,
-            )
-            keepers = flags.filter(F.col("keep") == 1).select(id_col)
-            # scoped: only the caches THIS call tracked are released —
-            # a session-global release_caches() here would free
-            # localCheckpoint blocks owned by unrelated in-flight work
-            batch.join(keepers, id_col, "left_semi").write.mode(
-                "append"
-            ).parquet(corpus_path)
-
-    return write_batch

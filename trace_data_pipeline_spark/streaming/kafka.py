@@ -12,6 +12,7 @@ shipped in this container).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,7 +81,7 @@ def kafka_json_stream(
         reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
     try:
         raw = reader.load()
-    except Exception as e:  # connector jar not on classpath
+    except AnalysisException as e:  # connector jar not on classpath
         raise RuntimeError(
             "Kafka source unavailable — add the spark-sql-kafka connector "
             "package to the cluster classpath (not shipped here)"
