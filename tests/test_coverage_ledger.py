@@ -65,24 +65,39 @@ def test_parity_stamps_postdate_entry_commits():
 def test_stale_parity_stamps_reports_tampered_entries(tmp_path):
     """The digest check is not vacuous: in a copy of PARITY.json, alter
     one entry's digest at one scale and drop another entry's digest at
-    another scale — exactly those two entries, at exactly those scales,
-    are reported."""
-    from coverage_ledger import entry_dependency_files, stale_parity_stamps
+    another scale — the report grows by exactly those two (entry,
+    scale) pairs over an untampered copy written the same way. Both
+    records carry the checked-out digest before the tampering, so the
+    test holds whether or not other stamps are stale."""
+    from coverage_ledger import (
+        entry_dependency_files,
+        entry_digests,
+        stale_parity_stamps,
+    )
 
     with open(os.path.join(REPO, "PARITY.json"), encoding="utf-8") as fh:
         parity = json.load(fh)
     first, *_, last = sorted(parity["scales"])
     altered, removed = sorted(parity["scales"][first]["entries"])[:2]
-    parity["scales"][first]["entries"][altered]["tree_digest"] = "0" * 64
-    del parity["scales"][last]["entries"][removed]["tree_digest"]
-    path = tmp_path / "PARITY.json"
-    path.write_text(json.dumps(parity), encoding="utf-8")
+    digests, _ = entry_digests(entry_dependency_files())
+    rec_altered = parity["scales"][first]["entries"][altered]
+    rec_removed = parity["scales"][last]["entries"][removed]
+    rec_altered["tree_digest"] = digests[altered]
+    rec_removed["tree_digest"] = digests[removed]
 
-    stale = stale_parity_stamps(parity_path=str(path))
-    assert {n: r["scales"] for n, r in stale.items()} == {
-        altered: [first],
-        removed: [last],
-    }
+    def stale_pairs(name):
+        path = tmp_path / name
+        path.write_text(json.dumps(parity), encoding="utf-8")
+        stale = stale_parity_stamps(parity_path=str(path))
+        return stale, {(n, sc) for n, r in stale.items() for sc in r["scales"]}
+
+    _, untampered = stale_pairs("untampered.json")
+    rec_altered["tree_digest"] = "0" * 64
+    del rec_removed["tree_digest"]
+    stale, tampered = stale_pairs("tampered.json")
+    pairs = {(altered, first), (removed, last)}
+    assert not pairs & untampered
+    assert tampered == untampered | pairs
     assert stale[altered]["files"] == entry_dependency_files()[altered]
 
 

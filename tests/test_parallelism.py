@@ -112,3 +112,22 @@ def test_streaming_plan_degrades_to_widening(spark):
     out = ensure_min_parallelism(df, num_partitions=4)
     assert out is not df and out.isStreaming
     assert _estimated_bytes(df) is None
+
+
+def test_width_probe_runs_no_job(spark):
+    """The probe asks Spark for the scan's partition count without
+    running a job, and a second call on the same frame reuses the
+    frame's RDD. A plan with an exchange would run AQE stages here."""
+    from tests.conftest import TEST_SF_DIR
+    from trace_data_pipeline_spark.sources.registry import load_table
+
+    fresh = spark.newSession()  # empty per-session table cache
+    df = load_table(fresh, TEST_SF_DIR, "documents")
+    sc = spark.sparkContext
+    group = f"width-probe-{id(df)}"
+    sc.setJobGroup(group, "ensure_min_parallelism probe")
+    first = ensure_min_parallelism(df)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    second = ensure_min_parallelism(df)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _n_parts(second) == _n_parts(first)
